@@ -154,25 +154,25 @@ object Bench {
 
     val perQuery = queries.map { case (n, _) => n -> best(timings(n)) }
     val failed = perQuery.collect { case (n, v) if v < 0 => n }
-    val qs = perQuery.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+    val qs = perQuery.map { case (k, v) => "\"" + k + "\":" + Fmt.fixed(v, 3) }
       .mkString("{", ",", "}")
     val familyTotals = perQuery.filter(_._2 >= 0).groupBy { case (n, _) => family(n) }
       .toSeq.sortBy(_._1)
-      .map { case (fam, xs) => "\"" + fam + "\":" + f"${xs.map(_._2).sum}%.3f" }
+      .map { case (fam, xs) => "\"" + fam + "\":" + Fmt.fixed(xs.map(_._2).sum, 3) }
       .mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val everyPassOk: Set[String] =
       timings.collect { case (n, ts) if ts.forall(_ >= 0) => n }.toSet
     val passTotals = passResults
-      .map(p => f"${p.collect { case (n, t) if everyPassOk(n) => t }.sum}%.3f")
+      .map(p => Fmt.fixed(p.collect { case (n, t) if everyPassOk(n) => t }.sum, 3))
       .mkString("[", ",", "]")
     // Per-query per-pass record: the per-query variance band that lets a
     // regression be adjudicated against ambient load without re-runs.
     val passQueries = passResults
-      .map(_.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}"))
+      .map(_.map { case (k, v) => "\"" + k + "\":" + Fmt.fixed(v, 3) }.mkString("{", ",", "}"))
       .mkString("[", ",", "]")
-    val loadsJson = loads.map(l => f"$l%.2f").mkString("[", ",", "]")
-    val gateJson = gateWaits.map(w => f"$w%.1f").mkString("[", ",", "]")
+    val loadsJson = loads.map(Fmt.fixed(_, 2)).mkString("[", ",", "]")
+    val gateJson = gateWaits.map(Fmt.fixed(_, 1)).mkString("[", ",", "]")
     val total = perQuery.map(_._2).filter(_ >= 0).sum
     // Streaming drains cancel in-flight jobs at their time/volume limit,
     // and Spark logs those cancellations as ERROR-level stack traces on
@@ -189,7 +189,7 @@ object Bench {
     // per-query bests, loadavg, pass totals — sits at the END where
     // truncation can't reach it. JSON semantics are order-free; the
     // live driver parse is unaffected.
-    val line = f"""{"metric":"total","pass_queries":$passQueries,"queries":$qs,"families":$familyTotals,"pass_totals":$passTotals,"loadavg":$loadsJson,"gate_waits_sec":$gateJson,"start_gate_wait_sec":$startGateWait%.1f,"gated_start":$gatedStart,"failed":$failedJson,"failed_count":${failed.size},"sf":"$sfDir","unit":"sec","value":$total%.3f}"""
+    val line = s"""{"metric":"total","pass_queries":$passQueries,"queries":$qs,"families":$familyTotals,"pass_totals":$passTotals,"loadavg":$loadsJson,"gate_waits_sec":$gateJson,"start_gate_wait_sec":${Fmt.fixed(startGateWait, 1)},"gated_start":$gatedStart,"failed":$failedJson,"failed_count":${failed.size},"sf":"$sfDir","unit":"sec","value":${Fmt.fixed(total, 3)}}"""
     println(line)
     // Belt and braces: the COMPLETE artifact also lands in a repo file
     // that gets committed whole (BASELINE.md points at it), immune to

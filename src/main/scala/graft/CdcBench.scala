@@ -82,7 +82,7 @@ object CdcBench {
       val bytes = Layout.bucketFileSignatures(spark, snap)
         .filter(kv => touched.contains(kv._1))
         .values.flatMap(_.values.map(_._1)).sum
-      s"""{"update_rows":$rows,"touched":${touched.size},"sec":${f"$sec%.3f"},"bytes_rewritten":$bytes}"""
+      s"""{"update_rows":$rows,"touched":${touched.size},"sec":${Fmt.fixed(sec, 3)},"bytes_rewritten":$bytes}"""
     }
 
     // q143-shape control: full-snapshot rewrite for the SMALLEST batch
@@ -97,7 +97,7 @@ object CdcBench {
 
     println(s"""{"snapshot_rows":$n,"snapshot_bytes":${dirBytes(snap)},"buckets":$buckets,""" +
       s""""merges":[${merges.mkString(",")}],""" +
-      s""""full_rewrite_control":{"update_rows":$ctlRows,"sec":${f"$ctlSec%.3f"},"bytes_rewritten":$ctlBytes}}""")
+      s""""full_rewrite_control":{"update_rows":$ctlRows,"sec":${Fmt.fixed(ctlSec, 3)},"bytes_rewritten":$ctlBytes}}""")
     Staging.deleteRecursively(work)
     spark.stop()
   }

@@ -44,6 +44,12 @@ object Sessions {
       .config("spark.sql.warehouse.dir",
         sys.props("java.io.tmpdir") + "/graft_warehouse")
       .config("spark.ui.enabled", "false")
+      // No session here adds its own jars or files, so per-session
+      // artifact isolation buys nothing; with it on, every streaming
+      // query (each runs in a cloned session) gets a fresh executor
+      // classloader, so each `Pipeline.runOnce` recompiles its generated
+      // code in the tasks and runs it JIT-cold.
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   def local(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()

@@ -74,7 +74,7 @@ object StreamProbe {
       val allRemovals = ps.flatMap(_.stateOperators.toSeq).map(_.allRemovalsTimeMs).sum
       val commitTime = ps.flatMap(_.stateOperators.toSeq).map(_.commitTimeMs).sum
       val rows = ps.map(_.numInputRows).sum
-      val json = s"""{"query": "$name", "pass": $pass, "sec": ${f"$sec%.3f"}, "batches": ${ps.size}, """ +
+      val json = s"""{"query": "$name", "pass": $pass, "sec": ${Fmt.fixed(sec, 3)}, "batches": ${ps.size}, """ +
         s""""jobs": ${jobCount.get}, "input_rows": $rows, """ +
         sums.map { case (k, v) => s""""$k": $v""" }.mkString(", ") +
         s""", "stateUpdatesMs": $stateCommit, "stateRemovalsMs": $allRemovals, "stateCommitMs": $commitTime, "custom": $customJson}"""

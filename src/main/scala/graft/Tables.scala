@@ -26,11 +26,6 @@ import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZT
   * the table).
   */
 object Tables {
-  val relationalNames: Seq[String] =
-    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
-  val allNames: Seq[String] =
-    relationalNames ++ Seq("events", "documents", "embeddings")
-
   /** The set of `ts` physical read-types this engine knows how to
     * normalize. Kept visible so the drift-guard spec can assert the
     * failure mode for a type outside it. */
@@ -56,8 +51,4 @@ object Tables {
     case "events" => normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
     case n        => spark.read.parquet(s"$dir/$n.parquet")
   }
-
-  /** Register all tables as temp views for `spark.sql` access. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    allNames.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -72,5 +72,4 @@ object EnrichedEvent {
     * never exceptions, on malformed input). */
   def tstamp(c: Column): Column = Tstamps.enrichedTstamp(c)
   def asLong(c: Column): Column = c.try_cast("long")
-  def asDouble(c: Column): Column = c.try_cast("double")
 }

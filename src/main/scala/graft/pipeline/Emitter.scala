@@ -2,10 +2,12 @@ package graft.pipeline
 
 import java.time.Instant
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Tstamps
 
@@ -19,7 +21,8 @@ import graft.functions.Tstamps
   *      partition value (the reference's one-object-per-flush semantics),
   *      named `[prefix-][partition-]yyyy-MM-dd-HHmmss-firstSeq-lastSeq.gz`
   *      under the date-decorated output dir (KinesisS3Emitter.scala:226-244,
-  *      DynamicPath.scala:35-64),
+  *      DynamicPath.scala:35-64); the batch meta and seq range are
+  *      observed on this same execution,
   *   3. route bad rows (reading errors / upstream failures) as
   *      snowplow-badrows GenericError JSON lines to the dead-letter dir —
   *      synchronous, an upgrade over the reference's fire-and-forget
@@ -42,10 +45,6 @@ object Emitter {
     earliestTstamp: Option[Instant],
     files: Seq[String])
 
-  /** @param df  batch frame with columns `value: string` (the record),
-    *            `seq: any` (ordering id for file naming; nullable),
-    *            `error: array<string>` (null = good record)
-    */
   /** Fixed backoff between output retries (reference
     * KinesisS3Emitter.scala:194-198: 10 000 ms); overridable for tests. */
   @volatile var retryBackoffMs: Long = 10000L
@@ -68,97 +67,115 @@ object Emitter {
     attempt()
   }
 
+  /** Emit one micro-batch: a batch without bad rows is ONE Spark
+    * execution, the staged write.
+    *
+    * @param df  batch frame with columns `value: string` (the record),
+    *            `seq: any` (ordering id for file naming; nullable),
+    *            `error: array<string>` (null = good record)
+    * @param statsDEnabled  ignored: an Enriched batch's earliest collector
+    *            tstamp is always part of its one observed aggregate
+    */
   def emitBatch(
     df: DataFrame,
     config: PipelineConfig,
     batchId: Long,
     now: Instant = Instant.now(),
     exactNaming: Boolean = true,
+    @deprecated("ignored; Enriched batches always observe the earliest collector tstamp", "0.1.0")
     statsDEnabled: Boolean = false): BatchResult = {
 
     val spark = df.sparkSession
-    val batch = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val rowType: Column = config.purpose match {
-        case Purpose.SelfDescribingJson => RowTypes.partition(col("value"), col("error"))
-        case _ =>
-          when(col("error").isNotNull, lit(RowTypes.ReadingErrorName))
-            .otherwise(lit(RowTypes.UnpartitionedName))
-      }
-      val typed = batch.withColumn("row_type", rowType)
+    val rowType: Column = config.purpose match {
+      case Purpose.SelfDescribingJson => RowTypes.partition(col("value"), col("error"))
+      case _ =>
+        when(col("error").isNotNull, lit(RowTypes.ReadingErrorName))
+          .otherwise(lit(RowTypes.UnpartitionedName))
+    }
+    val typed = df.withColumn("row_type", rowType)
+    // ReadingError rows go to the dead-letter channel, not the output,
+    // like the reference's emit returning them to fail()
+    // (KinesisS3Emitter.scala:83-84,100-105).
+    val isBad = col("error").isNotNull || col("row_type") === RowTypes.ReadingErrorName
 
-      // Batch-wide sequence range — the reference names all of a flush's
-      // objects with the buffer's first/last Kinesis sequence number
-      // (KinesisS3Emitter.scala:72-73). This `.head()` and the
-      // `bad.count()` below are two extra driver actions per micro-batch
-      // over the PERSISTED frame: at micro-batch sizes (bounded by the
-      // buffer limits) they cost two short jobs against cached blocks,
-      // not a recompute — deliberate, not an oversight.
-      val seqRow = batch.agg(
-        min(col("seq")).cast("string").as("first"),
-        max(col("seq")).cast("string").as("last"),
-        count(lit(1)).as("n")).head()
-      val (firstSeq, lastSeq) =
-        (Option(seqRow.getString(0)).getOrElse(batchId.toString),
-         Option(seqRow.getString(1)).getOrElse(batchId.toString))
-      val total = seqRow.getLong(2)
+    // Batch meta (reference Batch.scala:36-43) and the batch-wide seq
+    // range (the reference names all of a flush's objects with the
+    // buffer's first/last Kinesis sequence number,
+    // KinesisS3Emitter.scala:72-73) are observed on the staged write
+    // itself, over every row ahead of the good/bad filter: no cache and
+    // no extra pass over the batch.
+    val metrics = Seq(
+      min(col("seq")).cast("string").as("first"),
+      max(col("seq")).cast("string").as("last"),
+      count(lit(1)).as("n"),
+      count_if(isBad).as("bad")) ++ (config.purpose match {
+      case Purpose.Enriched => Seq(min(Tstamps.collectorTstamp(col("value"))).as("earliest"))
+      case _ => Nil
+    })
 
-      // Batch meta (reference Batch.scala:36-43): earliest collector
-      // tstamp only for Enriched purpose with metrics enabled.
-      val earliest: Option[Instant] = config.purpose match {
-        case Purpose.Enriched if statsDEnabled =>
-          Option(
-            batch.agg(min(Tstamps.collectorTstamp(col("value"))).as("t")).head().getTimestamp(0)
-          ).map(_.toInstant)
-        case _ => None
-      }
+    val outRoot = PipelinePaths.stripScheme(config.output.s3.path)
+    val staging = s"$outRoot/_staging/batch=$batchId"
 
-      // Good rows → gzip text files. ReadingError rows are excluded here
-      // and routed to the dead-letter channel below, like the reference's
-      // emit returning them to fail() (KinesisS3Emitter.scala:83-84,100-105).
-      val good = typed.filter(col("error").isNull && col("row_type") =!= RowTypes.ReadingErrorName)
-      val outRoot = PipelinePaths.stripScheme(config.output.s3.path)
-      val staging = s"$outRoot/_staging/batch=$batchId"
+    // Serializer seam (reference S3Loader.scala:41-44): resolve the
+    // codec for the configured compression; unregistered → hard error
+    // (same failure the reference's startup serializer selection gives).
+    val codec = Serializers.resolve(config.output.s3.compression)
+      .fold(msg => throw new IllegalStateException(msg), identity)
 
-      // Serializer seam (reference S3Loader.scala:41-44): resolve the
-      // codec for the configured compression; unregistered → hard error
-      // (same failure the reference's startup serializer selection gives).
-      val codec = Serializers.resolve(config.output.s3.compression)
-        .fold(msg => throw new IllegalStateException(msg), identity)
+    // Reference retry semantics (KinesisS3Emitter.scala:116-148): keep
+    // retrying the put with fixed backoff; after `maxTimeout` ms of
+    // continuous failure, give up hard (the reference halts the JVM;
+    // here the exception fails the streaming query, and the checkpoint
+    // makes the batch replayable — same at-least-one-attempt-per-10s
+    // behavior, stricter delivery).
+    val (files, observed) = retryForAtMost(config.output.s3.maxTimeout, retryBackoffMs) {
+      // An Observation reports once, so every attempt observes afresh.
+      val observation = Observation()
+      val toWrite = typed.observe(observation, metrics.head, metrics.tail: _*)
+        .filter(!isBad)
+        .select(col("value"), col("row_type"))
+      // Exact naming: one object per row type. Only SelfDescribingJson
+      // batches have several row types, so only they are exchanged by
+      // row type; every other purpose has one good row type, whose one
+      // object a coalesce writes from the task that reads the batch,
+      // without a shuffle.
+      val arranged =
+        if (!exactNaming) toWrite
+        else if (config.purpose == Purpose.SelfDescribingJson) toWrite.repartition(col("row_type"))
+        else toWrite.coalesce(1)
+      arranged.write
+        .mode(SaveMode.Overwrite)
+        .partitionBy("row_type")
+        .option("compression", codec.codecValue)
+        .text(staging)
+      // The metrics arrive through the listener bus once the write has
+      // finished; a report that never comes fails this attempt, so the
+      // maxTimeout budget bounds the wait like any other failure.
+      val m = Await.result(observation.future, math.max(1L, config.output.s3.maxTimeout).millis)
+      val first = Option(m.getAs[String]("first")).getOrElse(batchId.toString)
+      val last = Option(m.getAs[String]("last")).getOrElse(batchId.toString)
+      (commitStaged(spark, config.output.s3, staging, first, last, now, codec), m)
+    }
 
-      val toWrite = good.select(col("value"), col("row_type"))
-      val arranged = if (exactNaming) toWrite.repartition(col("row_type")) else toWrite
-
-      // Reference retry semantics (KinesisS3Emitter.scala:116-148): keep
-      // retrying the put with fixed backoff; after `maxTimeout` ms of
-      // continuous failure, give up hard (the reference halts the JVM;
-      // here the exception fails the streaming query, and the checkpoint
-      // makes the batch replayable — same at-least-one-attempt-per-10s
-      // behavior, stricter delivery).
-      val files = retryForAtMost(config.output.s3.maxTimeout, retryBackoffMs) {
-        arranged.write
-          .mode(SaveMode.Overwrite)
-          .partitionBy("row_type")
-          .option("compression", codec.codecValue)
-          .text(staging)
-        commitStaged(spark, config.output.s3, staging, firstSeq, lastSeq, now, codec)
-      }
-
-      // Bad rows → GenericError JSON lines, dead-letter directory.
-      val bad = typed.filter(col("error").isNotNull || col("row_type") === RowTypes.ReadingErrorName)
+    // Bad rows → GenericError JSON lines, dead-letter directory. Only a
+    // batch that has some pays this second execution; it recomputes the
+    // batch, which sees the same rows as the observed write because a
+    // checkpointed micro-batch re-reads the same source offsets.
+    val badCount = observed.getAs[Long]("bad")
+    if (badCount > 0) {
+      typed.filter(isBad)
         .select(BadRows.asJson(BadRows.genericError(
           col("value"),
           coalesce(col("error"), array(lit("Error writing raw event to output stream"))),
           lit(now.toString).cast("timestamp"))).as("value"))
-      val badCount = bad.count()
-      if (badCount > 0) {
-        bad.write.mode(SaveMode.Append).text(PipelinePaths.stripScheme(config.output.bad.streamName))
-      }
-
-      BatchResult(total, badCount, earliest, files)
-    } finally {
-      batch.unpersist()
+        .write.mode(SaveMode.Append).text(PipelinePaths.stripScheme(config.output.bad.streamName))
     }
+
+    val earliest = config.purpose match {
+      case Purpose.Enriched => Option(observed.getAs[java.sql.Timestamp]("earliest")).map(_.toInstant)
+      case _ => None
+    }
+    BatchResult(observed.getAs[Long]("n"), badCount, earliest, files)
   }
 
   /** Move each staged `row_type=X/part-*.txt.gz` file to its final

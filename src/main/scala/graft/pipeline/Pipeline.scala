@@ -7,13 +7,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.functions.Tstamps
-
 /** The streaming pipeline: Structured Streaming counterpart of the
   * reference's KCL dataflow (KinesisS3Pipeline.scala:38-51 →
   * KinesisS3Emitter.scala:65-86).
   *
-  *   file/stream source → (value, seq, error) → observe(min tstamp, count)
+  *   file/stream source → (value, seq, error)
   *   → foreachBatch { partitioned gzip emit + bad-row dead-letter }
   *
   * Mapping of the reference's pieces:
@@ -23,9 +21,10 @@ import graft.functions.Tstamps
   *   - BasicMemoryBuffer byte/record/time flush limits (Config.scala:172)
   *     → trigger interval (timeLimit) + `maxBytesPerTrigger` admission
   *     (byteLimit; see [[FileSource]] for the full mapping).
-  *   - StatsD per-flush report (KinesisS3Emitter.scala:74-75) →
-  *     `observe("meta", ...)` metrics read from each micro-batch's
-  *     progress and forwarded to StatsD.
+  *   - StatsD per-flush report (KinesisS3Emitter.scala:74-75) → each
+  *     micro-batch's [[Emitter.BatchResult]] (count + earliest collector
+  *     tstamp, observed on the emit's own write), reported after the
+  *     emit in both run modes.
   *
   * Scale: the per-batch plan is a narrow projection (no shuffle except
   * the optional exact-naming coalesce in the Emitter); source
@@ -71,61 +70,37 @@ object Pipeline {
     now: Option[Instant] = None,
     source: Source = FileSource): Result = {
 
-    val statsDEnabled = config.monitoring.exists(_.statsd.nonEmpty)
     val resolvedCheckpoint =
       checkpointDir.getOrElse(PipelinePaths.stripScheme(config.output.s3.path) + "/_checkpoint")
     val lines = source.lines(spark, config, Some(resolvedCheckpoint))
 
-    val base = records(lines, seqExpr)
-
-    // Batch meta as Spark-native observed metrics (SURVEY §2.1 O9/O10:
-    // min + count via observe, no extra pass over the data).
-    val observed = config.purpose match {
-      case Purpose.Enriched =>
-        base.observe("meta",
-          min(Tstamps.collectorTstamp(col("value"))).as("earliest_tstamp"),
-          count(lit(1)).as("count"))
-      case _ =>
-        base.observe("meta", count(lit(1)).as("count"))
-    }
-
     val results = new ConcurrentLinkedQueue[Emitter.BatchResult]()
 
-    val query = observed.writeStream
+    val query = records(lines, seqExpr).writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", resolvedCheckpoint)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val res = Emitter.emitBatch(df, config, batchId,
-          now = now.getOrElse(Instant.now()),
-          exactNaming = exactNaming,
-          statsDEnabled = statsDEnabled)
-        results.add(res)
+        results.add(emitAndReport(df, config, batchId, now.getOrElse(Instant.now()), exactNaming))
         ()
       }
       .start()
     query.awaitTermination()
 
-    val metas = query.recentProgress.toSeq.flatMap { p =>
-      Option(p.observedMetrics.get("meta")).map { row =>
-        val earliest = config.purpose match {
-          case Purpose.Enriched =>
-            Option(row.getAs[java.sql.Timestamp]("earliest_tstamp")).map(_.toInstant)
-          case _ => None
-        }
-        StatsD.Meta(earliest, row.getAs[Long]("count"))
-      }
-    }
-
-    // Reference reports StatsD after each successful emit
-    // (KinesisS3Emitter.scala:74-75); we report per micro-batch.
-    for {
-      m <- config.monitoring
-      sd <- m.statsd
-      meta <- metas
-    } StatsD.report(sd, meta)
-
     import scala.jdk.CollectionConverters._
-    Result(results.asScala.toSeq, metas)
+    val batches = results.asScala.toSeq
+    Result(batches, batches.map(meta))
+  }
+
+  private def meta(res: Emitter.BatchResult): StatsD.Meta = StatsD.Meta(res.earliestTstamp, res.count)
+
+  /** Emit one micro-batch, then report its meta to StatsD, as the
+    * reference does after each successful emit
+    * (KinesisS3Emitter.scala:74-75). */
+  private def emitAndReport(df: DataFrame, config: PipelineConfig, batchId: Long,
+                            now: Instant, exactNaming: Boolean): Emitter.BatchResult = {
+    val res = Emitter.emitBatch(df, config, batchId, now = now, exactNaming = exactNaming)
+    for (m <- config.monitoring; sd <- m.statsd) StatsD.report(sd, meta(res))
+    res
   }
 
   /** Continuous mode: same per-batch plan, ProcessingTime trigger from
@@ -133,7 +108,6 @@ object Pipeline {
     */
   def runContinuous(spark: SparkSession, config: PipelineConfig,
                     source: Source = FileSource): Unit = {
-    val statsDEnabled = config.monitoring.exists(_.statsd.nonEmpty)
     val lifecycle = config.monitoring.flatMap(_.snowplow).map { sp =>
       val lc = new Lifecycle(sp.path, sp.appId)
       lc.start()
@@ -159,11 +133,8 @@ object Pipeline {
       .trigger(Trigger.ProcessingTime(math.max(1000L, config.buffer.timeLimit)))
       .option("checkpointLocation", continuousCheckpoint)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        try {
-          val res = Emitter.emitBatch(df, config, batchId, statsDEnabled = statsDEnabled)
-          for (m <- config.monitoring; sd <- m.statsd)
-            StatsD.report(sd, StatsD.Meta(res.earliestTstamp, res.count))
-        } catch {
+        try emitAndReport(df, config, batchId, Instant.now(), exactNaming = true)
+        catch {
           case scala.util.control.NonFatal(e) =>
             lifecycle.foreach(_.storageWriteFailed(String.valueOf(e.getMessage)))
             throw e

@@ -5,6 +5,8 @@ import java.time.Instant
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryProgress
 
+import graft.Fmt
+
 /** Streaming lag/health metrics — the observability surface a 100×
   * operator watches FIRST (is the stream keeping up, how far behind the
   * watermark is, how big is state growing), emitted per micro-batch
@@ -81,14 +83,15 @@ object StreamingMetrics {
   private def sanitize(d: Double): Double =
     if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) 0.0 else d
 
-  /** The wire metrics for one batch: rates format with one decimal (a
-    * fixed format keeps goldens stable); the watermark lag is measured
-    * against the caller's `now` so tests can pin it. */
+  /** The wire metrics for one batch: rates format with one decimal and
+    * a `.` point in any JVM locale (a fixed format keeps goldens stable);
+    * the watermark lag is measured against the caller's `now` so tests
+    * can pin it. */
   def metrics(h: BatchHealth, now: Instant): List[StatsD.KVMetric] = {
     val base = List(
       StatsD.Count("stream.input_rows", h.numInputRows),
-      StatsD.Gauge("stream.input_rows_per_sec", f"${h.inputRowsPerSecond}%.1f"),
-      StatsD.Gauge("stream.processed_rows_per_sec", f"${h.processedRowsPerSecond}%.1f"),
+      StatsD.Gauge("stream.input_rows_per_sec", Fmt.fixed(h.inputRowsPerSecond, 1)),
+      StatsD.Gauge("stream.processed_rows_per_sec", Fmt.fixed(h.processedRowsPerSecond, 1)),
       StatsD.Gauge("stream.trigger_ms", h.triggerMs.toString))
     val lag = h.watermark.map(w =>
       StatsD.Gauge("stream.watermark_lag_sec",

@@ -47,7 +47,7 @@ class PipelineSpec extends SparkSpec {
 
         assert(result.batches.map(_.count).sum == 50)
         assert(result.batches.flatMap(_.files).nonEmpty)
-        // observe()-based meta: count + earliest collector tstamp
+        // batch meta observed on the emit's write: count + earliest collector tstamp
         assert(result.observedMeta.map(_.count).sum == 50)
         // i runs 1..50 so the earliest second is :01
         assert(result.observedMeta.flatMap(_.earliestTstamp).min
